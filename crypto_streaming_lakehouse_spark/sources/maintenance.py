@@ -1,5 +1,6 @@
 """Table maintenance: small-file compaction (the parquet-level analogue
-of Delta/Iceberg OPTIMIZE, which formats.py documents as waived here).
+of Delta/Iceberg OPTIMIZE; SCALE.md "Table formats" says why neither
+runtime is used here).
 
 Streaming sinks and fine-grained partitioning both breed small files;
 at 100 TB a scan's task count — and the NameNode/listing pressure — is

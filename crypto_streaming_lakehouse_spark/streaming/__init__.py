@@ -1,15 +1,3 @@
-from .pipeline import (
-    bronze_stream_to_silver,
-    run_batch_pipeline,
-    silver_stream_to_gold,
-    start_silver_job,
-    start_gold_job,
-)
+from .pipeline import run_batch_pipeline, start_gold_job, start_silver_job
 
-__all__ = [
-    "bronze_stream_to_silver",
-    "silver_stream_to_gold",
-    "start_silver_job",
-    "start_gold_job",
-    "run_batch_pipeline",
-]
+__all__ = ["start_silver_job", "start_gold_job", "run_batch_pipeline"]

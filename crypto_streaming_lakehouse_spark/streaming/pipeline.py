@@ -17,105 +17,38 @@ equivalence tests run.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.bars import ohlcv_bars
 from ..schemas import BRONZE_SCHEMA, SILVER_SCHEMA
-from ..transforms import bronze_to_silver, dedup_trades
+from ..transforms import bronze_to_silver, dedup_trades, kafka_records_to_bronze
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-HDFS_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-)
 
 
-def configure_state_store(spark: SparkSession, provider: str | None = None) -> str:
-    """Set the state-store backend for the stateful jobs started below.
+def _use_rocksdb(spark: SparkSession) -> None:
+    """Keep the stateful jobs' state in RocksDB with changelog checkpointing.
 
-    Default is **RocksDB with changelog checkpointing** — measured
-    strictly better than the on-heap HDFS-backed provider for the
+    Measured strictly better than the on-heap HDFS-backed provider for the
     watermarked-dedup pipeline at the 100k rows/s probe load (SCALE.md
-    round-10 table: 97.7k vs 85.7k rows/s sustained, ~106 vs ~350 B/row
-    of dedup state, 20 steady silver batches vs 4 snapshot-stalled
-    ones), and the only provider whose state is not bounded by executor
-    heap — at 100 TB-scale rates the dedup state (rate × watermark ×
-    bytes/row) outgrows on-heap storage long before the compute does.
+    round-10 table: 97.7k vs 85.7k rows/s sustained, ~106 vs ~350 B/row of
+    dedup state), and the only provider whose state is not bounded by
+    executor heap. Changelog checkpointing is required whenever dedup state
+    evicts on a watermark: plain RocksDB aborts the stream with a "mutation
+    occurred during iteration" error on eviction.
 
-    Changelog checkpointing is REQUIRED whenever dedup state evicts on a
-    watermark: plain RocksDB aborts the stream with a "mutation occurred
-    during iteration" error on eviction (round-10 operational finding).
-
-    ``provider`` (or env ``SPARK_GRAFT_STATE_PROVIDER``): ``rocksdb``
-    (default), ``hdfs`` (the previous on-heap default — also the right
-    choice when RESTARTING a checkpoint written by it, since the two
-    providers' state files are not interchangeable), or ``session``
-    (leave whatever the session already configured untouched).
-
-    The providerClass is a session-level SQL conf read at query START,
-    so this mutates the session: streams started later in the same
-    session inherit it unless reconfigured.
+    The provider class is recorded in each checkpoint's offset log, and a
+    restart restores it from there, so a checkpoint written under another
+    provider keeps running under that provider.
     """
-    provider = (
-        provider or os.environ.get("SPARK_GRAFT_STATE_PROVIDER") or "rocksdb"
-    ).lower()
-    if provider == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
-    elif provider == "hdfs":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", HDFS_PROVIDER
-        )
-    elif provider != "session":
-        raise ValueError(
-            f"unknown state-store provider {provider!r} "
-            "(expected rocksdb | hdfs | session)"
-        )
-    return provider
-
-
-def bronze_stream_to_silver(
-    bronze_stream: DataFrame,
-    *,
-    watermark: str = "2 minutes",
-    within_watermark: bool = False,
-) -> DataFrame:
-    """Silver plan over a streaming bronze source: parse + watermarked dedup.
-
-    Watermarked ``dropDuplicates`` keeps per-key state only until the
-    watermark passes — bounded state at any scale (T3).
-    ``within_watermark=True`` selects ``dropDuplicatesWithinWatermark``,
-    whose state is bounded by arrival gap instead of event time — the
-    preferred eviction policy when duplicates come from producer retries
-    (see transforms.dedup_trades for the semantic difference).
-    """
-    return dedup_trades(
-        bronze_to_silver(bronze_stream),
-        watermark=watermark,
-        within_watermark=within_watermark,
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true",
     )
-
-
-def silver_stream_to_gold(
-    silver_stream: DataFrame, *, bar: str = "1 minute", watermark: str = "2 minutes"
-) -> DataFrame:
-    """Gold plan over a streaming silver source: watermarked windowed OHLCV.
-
-    Append mode emits a bar only once its window is older than the
-    watermark — the stream's output equals the batch aggregation over the
-    closed windows (T1+T2).
-    """
-    return ohlcv_bars(silver_stream.withWatermark("event_time", watermark), bar=bar)
 
 
 def _start(
@@ -126,15 +59,18 @@ def _start(
     partition_by: list[str] | None,
     trigger: dict,
 ) -> StreamingQuery:
-    from ..sources.formats import stream_writer
-
-    return stream_writer(
-        df,
-        path=path,
-        checkpoint=checkpoint,
-        partition_by=partition_by,
-        trigger=trigger,
-    ).start()
+    """Append ``df`` to the parquet table at ``path``."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", path)
+        .option("checkpointLocation", checkpoint)
+        .option("compression", "snappy")
+        .outputMode("append")
+        .trigger(**trigger)
+    )
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    return writer.start()
 
 
 def start_records_to_bronze(
@@ -153,8 +89,6 @@ def start_records_to_bronze(
     parquet sink + checkpoint execute in a live microbatch loop; only the
     socket to a broker is substituted.
     """
-    from ..transforms import kafka_records_to_bronze
-
     return _start(
         kafka_records_to_bronze(records),
         path=bronze_dir,
@@ -208,11 +142,9 @@ def start_silver_job(
     silver_dir: str,
     checkpoint: str,
     watermark: str = "2 minutes",
-    within_watermark: bool = False,
     max_files_per_trigger: int | None = None,
     trigger: dict | None = None,
     backfill: bool = False,
-    state_provider: str | None = None,
 ) -> StreamingQuery:
     """Bronze dir → silver dir as a file-source stream (jobs EP2).
 
@@ -220,10 +152,9 @@ def start_silver_job(
     read+dedup+write of pre-existing bronze, then the continuous stream
     (T6). ``max_files_per_trigger`` is the file-source backpressure knob
     (T7). The watermarked-dedup state lives in RocksDB with changelog
-    checkpointing by default (see configure_state_store; pass
-    ``state_provider="hdfs"``/``"session"`` for legacy checkpoints).
+    checkpointing (see _use_rocksdb).
     """
-    configure_state_store(spark, state_provider)
+    _use_rocksdb(spark)
     if backfill:
         batch = dedup_trades(
             bronze_to_silver(spark.read.schema(BRONZE_SCHEMA).parquet(bronze_dir))
@@ -233,9 +164,8 @@ def start_silver_job(
     reader = spark.readStream.schema(BRONZE_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    bronze_stream = reader.parquet(bronze_dir)
-    silver = bronze_stream_to_silver(
-        bronze_stream, watermark=watermark, within_watermark=within_watermark
+    silver = dedup_trades(
+        bronze_to_silver(reader.parquet(bronze_dir)), watermark=watermark
     )
     return _start(
         silver,
@@ -255,14 +185,18 @@ def start_gold_job(
     bar: str = "1 minute",
     watermark: str = "2 minutes",
     trigger: dict | None = None,
-    state_provider: str | None = None,
 ) -> StreamingQuery:
     """Silver dir → gold bars dir; partitioned (bar_date, symbol) for
-    day+symbol pruned lookups (silver_to_gold_bars.py:72). Windowed-agg
-    state uses the same RocksDB+changelog default as the silver job."""
-    configure_state_store(spark, state_provider)
-    silver_stream = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
-    gold = silver_stream_to_gold(silver_stream, bar=bar, watermark=watermark)
+    day+symbol pruned lookups (silver_to_gold_bars.py:72).
+
+    Append mode emits a bar only once its window is older than the
+    watermark, so the output equals the batch aggregation over the closed
+    windows (T1+T2). Windowed-agg state lives in RocksDB like the silver
+    job's.
+    """
+    _use_rocksdb(spark)
+    silver = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
+    gold = ohlcv_bars(silver.withWatermark("event_time", watermark), bar=bar)
     return _start(
         gold,
         path=gold_dir,
@@ -283,7 +217,6 @@ def buy_sell_matches(
     *,
     within: str = "1 minute",
     watermark: str = "2 minutes",
-    streaming: bool = True,
     how: str = "inner",
 ) -> DataFrame:
     """Stream–stream join: each buy matched to same-symbol sells within
@@ -300,8 +233,8 @@ def buy_sell_matches(
     trail the inner ones by the watermark delay (the late-data price of
     outer semantics on streams).
 
-    ``streaming=False`` builds the identical plan for a batch frame — the
-    oracle side of the stream≡batch test (watermarks are no-ops in batch).
+    On a batch frame the watermarks are no-ops, so the same call builds
+    the oracle side of the stream≡batch tests.
     """
     from pyspark.sql import functions as F
 
@@ -315,9 +248,8 @@ def buy_sell_matches(
         F.col("event_time").alias("sell_time"),
         F.col("price").alias("sell_price"),
     )
-    if streaming:
-        buys = buys.withWatermark("buy_time", watermark)
-        sells = sells.withWatermark("sell_time", watermark)
+    buys = buys.withWatermark("buy_time", watermark)
+    sells = sells.withWatermark("sell_time", watermark)
     cond = (
         (F.col("b_symbol") == F.col("s_symbol"))
         & (F.col("sell_time") >= F.expr(f"buy_time - INTERVAL {within}"))

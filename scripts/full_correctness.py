@@ -224,9 +224,10 @@ def main() -> int:
             # left the artifact permanently stamped dirty and the
             # attestation tests red (observed round 15). Rewrite the
             # artifact with the prior rows and a fresh git stamp.
-            meta_prior = {
-                k: v for k, v in prior.items() if not k.startswith("_")
-            }
+            # prior is the registry-filtered row set; taking it in
+            # REGISTRY order once makes the written rows and every
+            # _meta counter below describe the same dict.
+            meta_prior = {n: prior[n] for n in REGISTRY if n in prior}
             out_meta = {
                 "_meta": {
                     "sf_dir": sf_dir,
@@ -270,12 +271,7 @@ def main() -> int:
                 }
             }
             with open(artifact, "w") as f:
-                json.dump(
-                    {**out_meta, **{n: meta_prior[n] for n in REGISTRY
-                                    if n in meta_prior}},
-                    f,
-                    indent=1,
-                )
+                json.dump({**out_meta, **meta_prior}, f, indent=1)
             print(json.dumps(out_meta["_meta"]))
             return 0
 
@@ -422,7 +418,7 @@ def main() -> int:
         )
         return cols, n, dig
 
-    def _spark_digest(sdf) -> tuple[int, str]:
+    def _spark_digest(name: str, sdf) -> tuple[int, str]:
         """(row_count, digest) of a Spark result, computed DISTRIBUTED.
 
         The digest is a commutative 256-bit modular sum of per-row
@@ -434,8 +430,11 @@ def main() -> int:
         q_edit_distance_join attestation at sf1.0; VERDICT r14 item 8).
         Canonicalization is the SAME _canon, imported on the workers;
         bytes are converted to bytearray to match what Spark Rows
-        expose for BinaryType. Falls back to the serial path if the
-        result schema cannot cross the Arrow boundary."""
+        expose for BinaryType. Falls back to the serial path, saying so,
+        only when the result schema has no Arrow form; that is checked
+        before anything runs, so a failing query fails once, here."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from tests.oracle import _canon
 
         cols = sdf.columns
@@ -468,80 +467,90 @@ def main() -> int:
             )
 
         try:
-            parts = sdf.mapInArrow(part, "n long, tot binary").collect()
-        except Exception:
+            to_arrow_schema(sdf.schema)
+        except TypeError as e:  # UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION
+            print(
+                f"[digest] {name}: serial fallback, no Arrow schema: "
+                f"{type(e).__name__}: {e}"[:300],
+                flush=True,
+            )
             return canonical_digest(cols, sdf.toLocalIterator())
+        parts = sdf.mapInArrow(part, "n long, tot binary").collect()
         n = sum(p.n for p in parts)
         total = sum(int.from_bytes(bytes(p.tot), "big") for p in parts) & mask
         return n, f"{total:064x}"
 
     out: dict[str, dict] = {}
     t_start = time.time()
-    for name, d in REGISTRY.items():
-        if only is not None and name not in only:
-            continue
-        rec = {
-            "rows_match": False,
-            "schema_match": False,
-            "hash_match": False,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-            # Pins WHICH oracle and WHICH implementation this green row
-            # attests: a later edit to either invalidates the row
-            # (tests/test_artifact_sync.py asserts both stored hashes
-            # match the live registry), so neither a changed oracle nor
-            # a changed implementation can ride on a stale green.
-            "oracle_sha": _oracle_sha(d.sql),
-            "impl_sha": _impl_sha(d.fn),
-        }
-        try:
-            sdf = d.fn(spark, sf_dir)
-            s_cols = sdf.columns
-            # Distributed digest: per-partition canonical sha256 sums
-            # combined on the driver (commutative) — giant results need
-            # neither a big driver nor a serial row loop.
-            s_n, s_dig = _spark_digest(sdf)
-            rec["spark_rows"] = s_n
-            if d.sql is None:
-                # No comparison performed: rows_match stays False; the
-                # record only attests the query executed without error.
-                rec["err"] = "no_oracle"
-                rec["executed"] = True
-            else:
-                try:
-                    d_cols, d_n, d_dig = _oracle_digest(d.sql)
-                except duckdb.InterruptException:
-                    rec["err"] = f"oracle_timeout>{timeout_s:g}s"
-                    # Record the cap numerically so a later run with a
-                    # RAISED cap treats this row as stale and retries it.
-                    rec["oracle_timeout_s"] = timeout_s
+    # try/finally: an exception escaping the sweep must not leak the
+    # fork pool's workers for the rest of the driver's life.
+    try:
+        for name, d in REGISTRY.items():
+            if only is not None and name not in only:
+                continue
+            rec = {
+                "rows_match": False,
+                "schema_match": False,
+                "hash_match": False,
+                "spark_rows": None,
+                "oracle_rows": None,
+                "err": None,
+                # Pins WHICH oracle and WHICH implementation this green row
+                # attests: a later edit to either invalidates the row
+                # (tests/test_artifact_sync.py asserts both stored hashes
+                # match the live registry), so neither a changed oracle nor
+                # a changed implementation can ride on a stale green.
+                "oracle_sha": _oracle_sha(d.sql),
+                "impl_sha": _impl_sha(d.fn),
+            }
+            try:
+                sdf = d.fn(spark, sf_dir)
+                s_cols = sdf.columns
+                # Distributed digest: per-partition canonical sha256 sums
+                # combined on the driver (commutative) — giant results need
+                # neither a big driver nor a serial row loop.
+                s_n, s_dig = _spark_digest(name, sdf)
+                rec["spark_rows"] = s_n
+                if d.sql is None:
+                    # No comparison performed: rows_match stays False; the
+                    # record only attests the query executed without error.
+                    rec["err"] = "no_oracle"
                     rec["executed"] = True
-                    out[name] = rec
-                    print(f"DNF  {name} (oracle >{timeout_s:g}s)", flush=True)
-                    continue
-                rec["oracle_rows"] = d_n
-                rec["rows_match"] = s_n == d_n
-                rec["schema_match"] = sorted(s_cols) == sorted(d_cols)
-                if rec["rows_match"] and rec["schema_match"]:
-                    rec["hash_match"] = s_dig == d_dig
-        except Exception as e:  # noqa: BLE001 — record, keep going
-            rec["err"] = f"{type(e).__name__}: {e}"[:300]
-            traceback.print_exc()
-        out[name] = rec
-        flag = "OK" if (rec["hash_match"] or rec["err"] == "no_oracle") else "FAIL"
-        print(f"{flag:4s} {name} ({rec['spark_rows']} rows)", flush=True)
-        if shard_suffix is not None:
-            # Crash-safe checkpoint: one lost row max per shard.
-            with open(artifact + shard_suffix, "w") as f:
-                json.dump(out, f, indent=1)
+                else:
+                    try:
+                        d_cols, d_n, d_dig = _oracle_digest(d.sql)
+                    except duckdb.InterruptException:
+                        rec["err"] = f"oracle_timeout>{timeout_s:g}s"
+                        # Record the cap numerically so a later run with a
+                        # RAISED cap treats this row as stale and retries it.
+                        rec["oracle_timeout_s"] = timeout_s
+                        rec["executed"] = True
+                        out[name] = rec
+                        print(f"DNF  {name} (oracle >{timeout_s:g}s)", flush=True)
+                        continue
+                    rec["oracle_rows"] = d_n
+                    rec["rows_match"] = s_n == d_n
+                    rec["schema_match"] = sorted(s_cols) == sorted(d_cols)
+                    if rec["rows_match"] and rec["schema_match"]:
+                        rec["hash_match"] = s_dig == d_dig
+            except Exception as e:  # noqa: BLE001 — record, keep going
+                rec["err"] = f"{type(e).__name__}: {e}"[:300]
+                traceback.print_exc()
+            out[name] = rec
+            ok = rec["hash_match"] or rec["err"] == "no_oracle"
+            flag = "OK" if ok else "FAIL"
+            print(f"{flag:4s} {name} ({rec['spark_rows']} rows)", flush=True)
+            if shard_suffix is not None:
+                # Crash-safe checkpoint: one lost row max per shard.
+                with open(artifact + shard_suffix, "w") as f:
+                    json.dump(out, f, indent=1)
+    finally:
+        if _pool_holder[0] is not None:
+            _pool_holder[0].terminate()
+            _pool_holder[0] = None
 
     def _is_timeout(r: dict) -> bool:
         return str(r.get("err") or "").startswith("oracle_timeout")
-
-    if _pool_holder[0] is not None:
-        _pool_holder[0].terminate()
-        _pool_holder[0] = None
 
     if only is not None and not update and shard_suffix is None:
         print(json.dumps(out, indent=1))

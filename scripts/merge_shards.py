@@ -125,12 +125,11 @@ def main() -> int:
     if dirty:
         # The override's first gate: each dirty shard must have RECORDED
         # its dirty file list at run time (full_correctness stamps
-        # dirty_files since round 15), and every dirty file must be
-        # artifact-only. A dirty attested file — including the harness
-        # itself (scripts/full_correctness.py, tests/oracle.py), which
-        # the impl_sha/oracle_sha pins below do NOT cover — refuses the
-        # merge (ADVICE r14).
-        harness_files = ("scripts/full_correctness.py", "tests/oracle.py")
+        # dirty_files since round 15), and every dirty file must be a
+        # CORRECTNESS_FULL_* artifact. Any other dirty file refuses the
+        # merge — the harness itself (scripts/full_correctness.py,
+        # tests/oracle.py) included, which the impl_sha/oracle_sha pins
+        # below do NOT cover (ADVICE r14).
         for m in shard_metas:
             if not m.get("git_dirty"):
                 continue
@@ -144,7 +143,6 @@ def main() -> int:
                 p
                 for p in recorded
                 if not os.path.basename(p).startswith("CORRECTNESS_FULL_")
-                or p in harness_files
             ]
             if non_artifact:
                 raise SystemExit(

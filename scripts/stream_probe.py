@@ -224,24 +224,11 @@ def main() -> None:
         "~rate x watermark keys, so raising it stresses the store "
         "without changing per-row work (VERDICT r11 item 6).",
     )
-    ap.add_argument(
-        "--state-provider",
-        choices=["hdfs", "rocksdb"],
-        default="rocksdb",
-        help="State store backend. RocksDB + changelog checkpointing is "
-        "the pipeline default since round 11 (measured better on every "
-        "axis — SCALE.md round-10 table); hdfs selects the previous "
-        "on-heap provider for comparison runs.",
-    )
     args = ap.parse_args()
 
     from crypto_streaming_lakehouse_spark.session import get_spark
 
     spark = get_spark("stream-probe")
-    # Route through the pipeline's own dispatch (start_*_job calls
-    # configure_state_store, which would otherwise override the session
-    # conf with the RocksDB default flipped in round 11).
-    os.environ["SPARK_GRAFT_STATE_PROVIDER"] = args.state_provider
     # ignore_cleanup_errors: state-store maintenance threads may still
     # be writing under the dir for a moment after stop(); a cleanup
     # race must not discard the already-collected measurements.

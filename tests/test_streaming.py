@@ -10,6 +10,8 @@ guarantees for these plans.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,20 +75,15 @@ def _rowset(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def test_state_store_default_is_rocksdb_with_changelog(
-    spark, bronze_dir, tmp_path, monkeypatch
-):
-    """VERDICT r10 item 2: the watermarked-dedup pipeline defaults to the
+def test_state_store_default_is_rocksdb_with_changelog(spark, bronze_dir, tmp_path):
+    """VERDICT r10 item 2: the watermarked-dedup pipeline runs on the
     RocksDB provider WITH changelog checkpointing (measured strictly
     better — SCALE.md round-10 table; changelog is required for
-    watermark eviction), with hdfs/session selectable as fallbacks."""
+    watermark eviction)."""
     from crypto_streaming_lakehouse_spark.streaming.pipeline import (
-        HDFS_PROVIDER,
         ROCKSDB_PROVIDER,
-        configure_state_store,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_STATE_PROVIDER", raising=False)
     _, bronze = bronze_dir
     q = start_silver_job(
         spark,
@@ -107,27 +104,6 @@ def test_state_store_default_is_rocksdb_with_changelog(
     # The stream actually ran and deduped under the RocksDB provider.
     out = spark.read.parquet(str(tmp_path / "silver_rdb"))
     assert out.count() == out.select(DEDUP_KEY).distinct().count() > 0
-
-    # Fallbacks: explicit arg and env both reach the session conf.
-    assert configure_state_store(spark, "hdfs") == "hdfs"
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        == HDFS_PROVIDER
-    )
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PROVIDER", "rocksdb")
-    assert configure_state_store(spark, None) == "rocksdb"
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        == ROCKSDB_PROVIDER
-    )
-    # "session" leaves the existing conf untouched.
-    assert configure_state_store(spark, "session") == "session"
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        == ROCKSDB_PROVIDER
-    )
-    with pytest.raises(ValueError):
-        configure_state_store(spark, "bogus")
 
 
 def test_silver_stream_matches_batch(spark, bronze_dir):
@@ -387,30 +363,6 @@ def test_bronze_job_runs_as_live_stream(spark, tmp_path):
     assert parsed.count() == bronze.count()
 
 
-def test_dedup_within_watermark_matches_batch(spark, bronze_dir, tmp_path):
-    """T3 scale path: dropDuplicatesWithinWatermark evicts state on arrival
-    gap rather than event time. The fixture's duplicates are exact copies
-    (identical event_time), so its output must equal the batch dedup —
-    the semantic divergence only appears for duplicates arriving more than
-    the delay apart."""
-    _, bronze = bronze_dir
-    silver_dir = str(tmp_path / "silver_ww")
-    q = start_silver_job(
-        spark,
-        bronze_dir=bronze,
-        silver_dir=silver_dir,
-        checkpoint=str(tmp_path / "ckpt_ww"),
-        within_watermark=True,
-        max_files_per_trigger=2,
-    )
-    q.awaitTermination(120)
-
-    streamed = spark.read.parquet(silver_dir)
-    batch = dedup_trades(bronze_to_silver(_read_bronze(spark, bronze)))
-    cols = [*DEDUP_KEY, "exchange", "order_type", "event_date"]
-    assert _rowset(streamed, cols) == _rowset(batch, cols)
-
-
 def test_stream_stream_join_matches_batch(spark, bronze_dir, tmp_path):
     """Stream-stream inner join with a time-range condition (finite state)
     equals the identical batch join over the same silver data."""
@@ -424,7 +376,7 @@ def test_stream_stream_join_matches_batch(spark, bronze_dir, tmp_path):
     out_dir = str(tmp_path / "matches")
     stream = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
     q = (
-        buy_sell_matches(stream, streaming=True)
+        buy_sell_matches(stream)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ckpt_ss"))
@@ -435,7 +387,7 @@ def test_stream_stream_join_matches_batch(spark, bronze_dir, tmp_path):
     q.awaitTermination(120)
 
     streamed = spark.read.parquet(out_dir)
-    batch = buy_sell_matches(spark.read.parquet(silver_dir), streaming=False)
+    batch = buy_sell_matches(spark.read.parquet(silver_dir))
     cols = ["symbol", "buy_time", "sell_time", "buy_price", "sell_price"]
     assert _rowset(streamed, cols) == _rowset(batch, cols)
     assert streamed.count() > 0
@@ -567,24 +519,6 @@ def test_stateful_ewma_matches_sequential_fold(spark, tmp_path):
     )
     assert len(merged) == n
     assert (abs(merged["ewma_s"] - merged["ewma_b"]) < 1e-9).all()
-
-
-def test_table_format_fallback_roundtrip(spark, tmp_path):
-    """Delta is probed at runtime and absent here → parquet fallback; the
-    data files are byte-compatible so a later move to Delta is a metadata
-    CONVERT, not a rewrite."""
-    from crypto_streaming_lakehouse_spark.sources.formats import (
-        table_format,
-        write_table,
-    )
-
-    assert table_format() in ("delta", "parquet")
-    t = events_as_trades(spark, SF_DIR).select("symbol", "price").limit(100)
-    dest = str(tmp_path / "tbl")
-    write_table(t, dest, mode="overwrite", partition_by=["symbol"])
-    back = spark.read.format(table_format()).load(dest)
-    assert back.count() == 100
-    assert set(back.columns) == {"symbol", "price"}
 
 
 def test_update_mode_windowed_agg_final_state(spark, bronze_dir, tmp_path):
@@ -724,7 +658,7 @@ def test_stream_stream_left_outer_join(spark, bronze_dir, tmp_path):
     out_dir = str(tmp_path / "matches_lo")
     stream = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
     q = (
-        buy_sell_matches(stream, streaming=True, how="leftOuter")
+        buy_sell_matches(stream, how="leftOuter")
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ckpt_lo"))
@@ -736,20 +670,32 @@ def test_stream_stream_left_outer_join(spark, bronze_dir, tmp_path):
 
     streamed = spark.read.parquet(out_dir)
     silver_batch = spark.read.parquet(silver_dir)
-    inner = buy_sell_matches(silver_batch, streaming=False)
+    inner = buy_sell_matches(silver_batch)
     cols = ["symbol", "buy_time", "sell_time", "buy_price", "sell_price"]
 
     matched = streamed.where(F.col("sell_time").isNotNull())
     assert _rowset(matched, cols) == _rowset(inner, cols)
 
-    outer_batch = buy_sell_matches(
-        silver_batch, streaming=False, how="leftOuter"
-    )
+    outer_batch = buy_sell_matches(silver_batch, how="leftOuter")
     unmatched_batch = outer_batch.where(F.col("sell_time").isNull())
     unmatched_stream = streamed.where(F.col("sell_time").isNull())
     assert set(_rowset(unmatched_stream, cols)) <= set(
         _rowset(unmatched_batch, cols)
     )
+
+
+def _run_until_first_commit(q, timeout_s: float = 60) -> int:
+    """Let an open-ended query commit at least one micro-batch, stop it,
+    and return the id of the last batch it reported."""
+    import time
+
+    deadline = time.time() + timeout_s
+    while time.time() < deadline and not q.recentProgress:
+        time.sleep(0.5)
+    q.stop()
+    q.awaitTermination(30)
+    assert q.recentProgress, "no micro-batch committed before the stop"
+    return max(p.batchId for p in q.recentProgress)
 
 
 def test_checkpoint_restart_no_dups_no_loss(spark, bronze_dir, tmp_path):
@@ -767,31 +713,136 @@ def test_checkpoint_restart_no_dups_no_loss(spark, bronze_dir, tmp_path):
     watermark (bounded state has a price — Spark's documented late-data
     semantics, observed reproducibly here). A wide watermark removes
     lateness from the equation and isolates the property under test:
-    checkpoint recovery itself loses nothing and replays nothing."""
-    _, bronze = bronze_dir
+    checkpoint recovery itself loses nothing and replays nothing.
+
+    Phase 3 then adds lateness on purpose: one new bronze file whose
+    rows lie 20 days behind the watermark restored from the checkpoint.
+    The third run on the same checkpoint must read them, drop every one
+    of them at the dedup operator, and report exactly that count in
+    ``numRowsDroppedByWatermark``."""
+    import shutil
+
+    from crypto_streaming_lakehouse_spark.schemas import TRADE_PAYLOAD_SCHEMA
+
+    # A per-test copy: phase 3 adds a file to it.
+    bronze = str(tmp_path / "bronze")
+    shutil.copytree(bronze_dir[1], bronze)
     silver_dir = str(tmp_path / "silver_restart")
     ckpt = str(tmp_path / "ckpt_restart")
 
-    # phase 1: one file per trigger, stop after the first commit
-    q1 = start_silver_job(
-        spark,
-        bronze_dir=bronze,
-        silver_dir=silver_dir,
-        checkpoint=ckpt,
-        watermark="40 days",
-        max_files_per_trigger=1,
-        trigger={"processingTime": "1 second"},  # open-ended: stopped mid-stream
-    )
-    import time as _time
+    def run(**kw):
+        return start_silver_job(
+            spark,
+            bronze_dir=bronze,
+            silver_dir=silver_dir,
+            checkpoint=ckpt,
+            watermark="40 days",
+            **kw,
+        )
 
-    deadline = _time.time() + 60
-    while _time.time() < deadline and not q1.recentProgress:
-        _time.sleep(0.5)
-    q1.stop()
-    q1.awaitTermination(30)
+    # phase 1: one file per trigger, stop after the first commit
+    _run_until_first_commit(
+        run(
+            max_files_per_trigger=1,
+            trigger={"processingTime": "1 second"},  # stopped mid-stream
+        )
+    )
     partial = spark.read.parquet(silver_dir).count()
 
     # phase 2: restart from the same checkpoint, drain everything
+    assert run(max_files_per_trigger=2).awaitTermination(120)
+
+    streamed = spark.read.parquet(silver_dir)
+    batch = dedup_trades(bronze_to_silver(_read_bronze(spark, bronze)))
+    cols = [*DEDUP_KEY, "exchange", "order_type", "event_date"]
+    want = _rowset(batch, cols)
+    assert _rowset(streamed, cols) == want
+    assert partial <= streamed.count()
+
+    # phase 3: one file of rows 60 days before the newest event time
+    src = _read_bronze(spark, bronze)
+    max_ms = bronze_to_silver(src).agg(F.max(F.unix_millis("event_time")))
+    late_ms = max_ms.first()[0] - 60 * 86_400_000
+    payload = F.from_json("value_raw", TRADE_PAYLOAD_SCHEMA)
+    late_dir = str(tmp_path / "late")
+    (
+        src.dropDuplicates(["offset"])
+        .orderBy("offset")
+        .limit(25)
+        .withColumn(
+            "value_raw",
+            F.to_json(
+                payload.withField("ts_event", F.lit(late_ms) + F.col("offset"))
+            ),
+        )
+        .coalesce(1)
+        .write.parquet(late_dir)
+    )
+    late = _read_bronze(spark, late_dir)
+    n_late = late.count()
+    for f in os.listdir(late_dir):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(late_dir, f), os.path.join(bronze, f))
+
+    q3 = run()
+    assert q3.awaitTermination(120)
+    progress = q3.recentProgress
+    assert sum(p.numInputRows for p in progress) == n_late
+    dropped = sum(
+        so.numRowsDroppedByWatermark for p in progress for so in p.stateOperators
+    )
+    assert dropped == n_late
+    streamed = spark.read.parquet(silver_dir)
+    assert _rowset(streamed, cols) == want
+    late_keys = set(_rowset(bronze_to_silver(late), DEDUP_KEY))
+    assert not late_keys & set(_rowset(streamed, DEDUP_KEY))
+
+
+def test_restart_keeps_checkpoint_state_provider(spark, bronze_dir, tmp_path):
+    """A checkpoint written under the on-heap HDFS-backed provider
+    restarts through start_silver_job — which configures RocksDB — with
+    no loss and no duplicates, and keeps running under the HDFS provider.
+    Spark records the provider class in each batch's offset-log metadata
+    and restores it on restart, so old checkpoints need no provider
+    option in the pipeline."""
+    import json
+
+    hdfs = (
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider"
+    )
+    key = "spark.sql.streaming.stateStore.providerClass"
+    _, bronze = bronze_dir
+    silver_dir = str(tmp_path / "silver")
+    ckpt = str(tmp_path / "ckpt")
+
+    # phase 1: raw writeStream with the session on the HDFS provider
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, hdfs)
+    try:
+        stream = (
+            spark.readStream.schema(BRONZE_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(bronze)
+        )
+        q1 = (
+            dedup_trades(bronze_to_silver(stream), watermark="40 days")
+            .writeStream.format("parquet")
+            .option("path", silver_dir)
+            .option("checkpointLocation", ckpt)
+            .partitionBy("event_date")
+            .outputMode("append")
+            .trigger(processingTime="1 second")
+            .start()
+        )
+        last_phase1 = _run_until_first_commit(q1)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+    # phase 2: restart on the same checkpoint through the pipeline
     q2 = start_silver_job(
         spark,
         bronze_dir=bronze,
@@ -806,7 +857,19 @@ def test_checkpoint_restart_no_dups_no_loss(spark, bronze_dir, tmp_path):
     batch = dedup_trades(bronze_to_silver(_read_bronze(spark, bronze)))
     cols = [*DEDUP_KEY, "exchange", "order_type", "event_date"]
     assert _rowset(streamed, cols) == _rowset(batch, cols)
-    assert partial <= streamed.count()
+
+    offsets = os.path.join(ckpt, "offsets")
+    last = max(int(f) for f in os.listdir(offsets) if f.isdigit())
+    assert last > last_phase1, "phase 2 planned no batch of its own"
+    with open(os.path.join(offsets, str(last))) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    assert meta["conf"][key] == hdfs
+    # ...and the state files phase 2 wrote are the HDFS provider's deltas.
+    state_files = [
+        f for _, _, fs in os.walk(os.path.join(ckpt, "state")) for f in fs
+    ]
+    assert any(f.endswith(".delta") for f in state_files)
+    assert not any(f.endswith((".changelog", ".zip")) for f in state_files)
 
 
 def test_query_listener_and_state_metrics(spark, bronze_dir, tmp_path):
@@ -957,7 +1020,7 @@ def test_stream_stream_full_outer_join(spark, bronze_dir, tmp_path):
     out_dir = str(tmp_path / "matches_fo")
     stream = spark.readStream.schema(SILVER_SCHEMA).parquet(silver_dir)
     q = (
-        buy_sell_matches(stream, streaming=True, how="fullOuter")
+        buy_sell_matches(stream, how="fullOuter")
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", str(tmp_path / "ckpt_fo"))
@@ -969,7 +1032,7 @@ def test_stream_stream_full_outer_join(spark, bronze_dir, tmp_path):
 
     streamed = spark.read.parquet(out_dir)
     silver_batch = spark.read.parquet(silver_dir)
-    inner = buy_sell_matches(silver_batch, streaming=False)
+    inner = buy_sell_matches(silver_batch)
     cols = ["symbol", "buy_time", "sell_time", "buy_price", "sell_price"]
 
     matched = streamed.where(
@@ -977,9 +1040,7 @@ def test_stream_stream_full_outer_join(spark, bronze_dir, tmp_path):
     )
     assert _rowset(matched, cols) == _rowset(inner, cols)
 
-    full_batch = buy_sell_matches(
-        silver_batch, streaming=False, how="fullOuter"
-    )
+    full_batch = buy_sell_matches(silver_batch, how="fullOuter")
     for null_side in ("sell_time", "buy_time"):
         stream_side = streamed.where(F.col(null_side).isNull())
         batch_side = full_batch.where(F.col(null_side).isNull())
